@@ -73,25 +73,11 @@ class Database:
         they remain readable until ``vacuum()`` garbage-collects
         segments superseded by a later compaction. The reference
         cannot express this (its visibility is always "now")."""
-        if as_of is None:
-            return Transaction(self, horizon=self._current_horizon())
         horizon = self._current_horizon()
-        if as_of >= horizon:
-            raise ValueError(f"as_of={as_of} is in the future (next txn {horizon})")
-        # Fail LOUDLY when the historical snapshot is no longer
-        # complete: a compaction beyond the horizon replaced txns
-        # inside it and vacuum deleted their manifests — silently
-        # scanning the survivors would return partial data. The check
-        # walks replace-CHAINS via each rollup's covers_lo, so a
-        # vacuumed intermediate rollup cannot hide the loss.
-        gone = manifest.missing_history(self.path, as_of)
-        if gone:
-            raise ValueError(
-                f"time-travel snapshot as_of={as_of} is unreadable: txns "
-                f"{gone} were superseded by a later compaction and vacuumed "
-                f"away; historical reads are valid only until vacuum"
-            )
-        return Transaction(self, horizon=as_of + 1, read_only=True)
+        if as_of is None:
+            return Transaction(self, horizon=horizon)
+        horizon = manifest.as_of_horizon(self.path, as_of, horizon)
+        return Transaction(self, horizon=horizon, read_only=True)
 
     def _current_horizon(self) -> int:
         """Snapshot horizon covering every commit visible ON DISK right
@@ -188,31 +174,14 @@ class Database:
         # re-ingest an already-landed batch. Folds are idempotent
         # opportunities: a skipped one is absorbed by the next tier.
         try:
-            did = False
-            span, size = ac["every"], ac["every"]
-            while ac["n"] % span == 0:
-                did = (
-                    self.compact(
-                        max_txns=size,
-                        fold="newest",
-                        cluster=ac["cluster"],
-                        resolution=ac["resolution"],
-                    )
-                    is not None
-                ) or did
-                span *= ac["major"]
-                size = ac["major"]
-            if did and ac["vacuum"]:
-                # NOT min_age_seconds=0: a vacuum snapshot taken before
-                # a concurrent compaction stamps its reservation intent
-                # (but after this fold published) could otherwise
-                # reclaim window files the in-flight rewrite is still
-                # scanning — the intent-hold only protects intents
-                # visible at vacuum's read time. The recovery grace
-                # bounds any rewrite's stamp-to-publish window, so
-                # auto-vacuum retains that long; immediate reclamation
-                # stays available via an explicit user vacuum().
-                self.vacuum(min_age_seconds=manifest.DEFAULT_RECOVERY_GRACE)
+            self._level_folds(
+                ac["n"],
+                ac["every"],
+                ac["major"],
+                ac["vacuum"],
+                cluster=ac["cluster"],
+                resolution=ac["resolution"],
+            )
         except Exception:
             import warnings
 
@@ -221,6 +190,39 @@ class Database:
                 "commit; the fold will be retried by a later tier",
                 stacklevel=3,
             )
+
+    def _level_folds(
+        self, n: int, every: int, major: int, vacuum: bool, **fold_opts
+    ) -> None:
+        """One LSM leveling step after the ``n``-th write — the single
+        schedule behind auto-compaction and the streaming sink's
+        ``compact_every``. Tier 1 folds each ``every``-txn window; tier
+        k (span every·major^(k-1)) folds the ``major`` tier-(k-1)
+        rollups that accumulated since its last firing. All folds are
+        newest-contiguous, so a refused fold's raw txns are absorbed by
+        the next level up. Amortized: each row is rewritten once per
+        level = O(log_major writes) times; the visible txn count stays
+        O(every + major·log_major writes). Errors propagate: the caller
+        decides whether a failed fold fails its write."""
+        did = False
+        span, size = every, every
+        while n % span == 0:
+            did = (
+                self.compact(max_txns=size, fold="newest", **fold_opts) is not None
+            ) or did
+            span *= major
+            size = major
+        if did and vacuum:
+            # NOT min_age_seconds=0: a vacuum snapshot taken before
+            # a concurrent compaction stamps its reservation intent
+            # (but after this fold published) could otherwise
+            # reclaim window files the in-flight rewrite is still
+            # scanning — the intent-hold only protects intents
+            # visible at vacuum's read time. The recovery grace
+            # bounds any rewrite's stamp-to-publish window, so
+            # leveling retains that long; immediate reclamation
+            # stays available via an explicit user vacuum().
+            self.vacuum(min_age_seconds=manifest.DEFAULT_RECOVERY_GRACE)
 
     # ---- schema evolution ------------------------------------------
     def add_value_column(self, name: str, type: str = "long") -> None:
@@ -740,7 +742,7 @@ class Database:
         # window for this exact (since, hi) — recomputing would double
         # the per-poll manifest sweep
         window = (
-            self._change_window_txns(since, hi, include_compactions)
+            m.change_window_txns(self.path, since, hi, include_compactions)
             if _window is None
             else _window
         )
@@ -827,43 +829,6 @@ class Database:
         )
         return df.withColumn("change_type", refined).drop("__pre")
 
-    def _change_window_txns(
-        self, since: int, until: int, include_compactions: bool
-    ) -> list[int]:
-        """Committed txns in (since, until] that carry feed content
-        (compaction rewrites excluded unless opted in). Raises when the
-        window's content was vacuumed away — a compaction manifest
-        replaces ids inside the window whose own manifests no longer
-        exist — instead of silently returning an incomplete feed.
-        Manifests are immutable, so reads go through the cache (a tail
-        loop would otherwise re-open every manifest each poll)."""
-        from matdb_spark import manifest as m
-
-        committed = set(m.committed_txn_ids(self.path))
-        if not include_compactions:
-            # covers_lo-aware chain walk: a vacuumed INTERMEDIATE
-            # rollup must not hide that window commits are gone (the
-            # direct-replaces check alone would find nothing once the
-            # rollup that listed them was itself vacuumed)
-            vacuumed = m.missing_feed_content(self.path, since, until)
-            if vacuumed:
-                raise ValueError(
-                    f"change window ({since}, {until}] is unreadable: txns "
-                    f"{vacuumed} were superseded by compaction and vacuumed "
-                    f"away; re-sync from a snapshot or pass "
-                    f"include_compactions=True"
-                )
-        window = []
-        for t in sorted(committed):
-            if not (since < t <= until):
-                continue
-            if not include_compactions and (
-                m.read_manifest_cached(self.path, t).get("replaces")
-            ):
-                continue
-            window.append(t)
-        return window
-
     def follow_changes(
         self,
         since: int | None = None,
@@ -906,7 +871,7 @@ class Database:
             while max_empty_polls is None or empty < max_empty_polls:
                 newest = m.safe_feed_head(self.path)
                 win = (
-                    self._change_window_txns(cursor, newest, include_compactions)
+                    m.change_window_txns(self.path, cursor, newest, include_compactions)
                     if newest > cursor
                     else []
                 )

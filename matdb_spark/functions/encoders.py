@@ -35,10 +35,6 @@ def fixed_point_encode(col: Column, scale: int = 1000) -> Column:
     return (d * scale).cast("long")
 
 
-def fixed_point_decode(col: Column, scale: int = 1000) -> Column:
-    return col.cast("double") / scale
-
-
 def dictionary_encode(
     df: DataFrame,
     key_cols: list[str],

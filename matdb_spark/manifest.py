@@ -33,6 +33,7 @@ import os
 import re
 import shutil
 import time
+import uuid
 
 _COMMITS_DIR = "_commits"
 _DATA_DIR = "data"
@@ -44,6 +45,7 @@ _MANIFEST_RE = re.compile(r"^(\d{8,})\.json$")
 #: write-once, which is what keeps ``_read_checkpoint_cached`` safe.
 _CHECKPOINT_RE = re.compile(r"^_checkpoint\.(\d{8,})(?:\.(\d+))?\.json$")
 TXN_DIR_RE = re.compile(r"^txn=(\d+)$")
+_STORE_MARK_RE = re.compile(r"^_store\.([0-9a-f]{32})$")
 
 #: Auto-fold the committed manifest set into a checkpoint file every
 #: this-many commits (Transaction.commit / the DSv2 writers call
@@ -59,6 +61,13 @@ DEFAULT_CHECKPOINT_INTERVAL = 64
 #: per-manifest read path can consult the checkpoint WITHOUT its own
 #: listing call.
 _CK_HINT: dict[str, tuple[int, int] | None] = {}
+
+#: Incarnation marker (``_commits/_store.<uuid>``, written once by
+#: ``init_layout``) last listed per store path. The caches above live
+#: in EVERY process that reads the store — DSv2 planning runs in
+#: reused Python workers, not the driver that re-created a store — so
+#: each listing compares the marker and drops the caches on a change.
+_STORE_MARK: dict[str, str | None] = {}
 
 
 def commits_dir(db_path: str) -> str:
@@ -78,11 +87,21 @@ def manifest_path(db_path: str, txn_id: int) -> str:
 
 
 def init_layout(db_path: str) -> None:
+    fresh = not os.path.isdir(commits_dir(db_path))
     os.makedirs(commits_dir(db_path), exist_ok=True)
     os.makedirs(data_dir(db_path), exist_ok=True)
-    # A store may be deleted and re-created at the same path within one
-    # driver process; cached manifests keyed (path, txn_id) would then
-    # describe the OLD store and mis-prune scans of the new one.
+    if fresh:
+        # incarnation marker: every process's next listing
+        # (committed_txn_ids) sees that the store was re-created
+        marker = f"_store.{uuid.uuid4().hex}"
+        open(os.path.join(commits_dir(db_path), marker), "x").close()
+    _forget_cached(db_path)
+
+
+def _forget_cached(db_path: str) -> None:
+    """A store may be deleted and re-created at the same path; cached
+    manifests keyed (path, txn_id) would then describe the OLD store
+    and mis-prune scans of the new one."""
     read_manifest_cached.cache_clear()
     _read_checkpoint_cached.cache_clear()
     _CK_HINT.pop(db_path, None)
@@ -102,6 +121,7 @@ def committed_txn_ids(db_path: str) -> list[int]:
     sweep hit the folded map instead of one JSON file each."""
     out = []
     ck: tuple[int, int] | None = None
+    mark = None
     for name in os.listdir(commits_dir(db_path)):
         m = _MANIFEST_RE.match(name)
         if m:
@@ -111,6 +131,13 @@ def committed_txn_ids(db_path: str) -> list[int]:
         if c:
             key = (int(c.group(1)), int(c.group(2) or 0))
             ck = key if ck is None else max(ck, key)
+            continue
+        sm = _STORE_MARK_RE.match(name)
+        if sm:
+            mark = sm.group(1)
+    if _STORE_MARK.get(db_path, mark) != mark:
+        _forget_cached(db_path)
+    _STORE_MARK[db_path] = mark
     _CK_HINT[db_path] = ck
     if ck is not None:
         _map, pruned = _read_checkpoint_cached(db_path, ck)
@@ -189,14 +216,6 @@ def _read_checkpoint_cached(
         {int(k): v for k, v in raw.get("manifests", {}).items()},
         frozenset(int(t) for t in raw.get("pruned", [])),
     )
-
-
-def latest_checkpoint_id(db_path: str) -> int | None:
-    """Newest checkpoint's top txn id from a fresh listing (None if no
-    checkpoint exists)."""
-    committed_txn_ids(db_path)  # refreshes _CK_HINT
-    ck = _CK_HINT.get(db_path)
-    return None if ck is None else ck[0]
 
 
 def _list_checkpoints(db_path: str) -> list[tuple[int, int]]:
@@ -794,6 +813,61 @@ def missing_history(db_path: str, as_of: int) -> list[int]:
         if t > as_of:
             gone.update(missing(t))
     return sorted(gone)
+
+
+def as_of_horizon(db_path: str, as_of: int, current: int) -> int:
+    """Horizon of the time-travel snapshot that sees exactly the
+    commits with id <= ``as_of`` (``current`` = the live horizon).
+    Fails LOUDLY on a future ``as_of`` and when the historical snapshot
+    is no longer complete: a compaction beyond the horizon replaced
+    txns inside it and vacuum deleted their manifests — silently
+    scanning the survivors would return partial data. The check walks
+    replace-CHAINS via each rollup's covers_lo (``missing_history``),
+    so a vacuumed intermediate rollup cannot hide the loss. Shared by
+    ``Database.begin`` and the DSv2 snapshot reader."""
+    if as_of >= current:
+        raise ValueError(f"as_of={as_of} is in the future (next txn {current})")
+    gone = missing_history(db_path, as_of)
+    if gone:
+        raise ValueError(
+            f"time-travel snapshot as_of={as_of} is unreadable: txns "
+            f"{gone} were superseded by a later compaction and vacuumed "
+            f"away; historical reads are valid only until vacuum"
+        )
+    return as_of + 1
+
+
+def change_window_txns(
+    db_path: str, since: int, until: int, include_compactions: bool
+) -> list[int]:
+    """Committed txns in the change-feed window ``(since, until]`` that
+    carry feed content (compaction rewrites — ``replaces`` manifests —
+    excluded unless opted in). Raises when the window's content was
+    vacuumed away instead of silently returning an incomplete feed:
+    the covers_lo-aware chain walk (``missing_feed_content``) sees a
+    vacuumed INTERMEDIATE rollup too, which a direct-replaces check
+    would miss. Manifests are immutable, so reads go through the cache
+    (a tail loop would otherwise re-open every manifest each poll).
+    Shared by ``Database.changes``/``follow_changes`` and the DSv2 CDC
+    source."""
+    if not include_compactions:
+        vacuumed = missing_feed_content(db_path, since, until)
+        if vacuumed:
+            raise ValueError(
+                f"change window ({since}, {until}] is unreadable: txns "
+                f"{vacuumed} were superseded by compaction and vacuumed "
+                f"away; re-sync from a snapshot or pass "
+                f"include_compactions=True"
+            )
+    return [
+        t
+        for t in committed_txn_ids(db_path)
+        if since < t <= until
+        and (
+            include_compactions
+            or not read_manifest_cached(db_path, t).get("replaces")
+        )
+    ]
 
 
 def discard_txn_data(db_path: str, txn_id: int, force: bool = False) -> None:

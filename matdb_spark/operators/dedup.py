@@ -910,7 +910,8 @@ def admit_batches(
     listing is snapshotted when the read DataFrame is built, before
     the write starts). The returned frame never embeds a per-batch
     decision plan at all: it re-derives admitted ids from the FINAL
-    index (admitted == appended), which is exact because this
+    index (admitted == appended, plus the gramless documents no index
+    row can represent), which is exact because this
     lifecycle starts from an empty/absent index and ``batch_fn``
     partitions ids disjointly — the preconditions this operator
     declares (a replayed/pre-populated index needs admit_batch's
@@ -924,12 +925,30 @@ def admit_batches(
             f"admit_batches requires a fresh index path (found band "
             f"partitions at {path}); replay semantics live in admit_batch"
         )
-    banded_all = banded_minhash(
-        docs, id_col, text_col, k, bands, shingle_n
-    ).localCheckpoint()
+    # A document without a single shingle (empty, or fewer than
+    # ``shingle_n`` words) has no banding rows: nothing can match it,
+    # so it is admitted in its batch (admit_batch's outcome) and never
+    # enters the index. Such documents ride the one banding checkpoint
+    # as band=-1 marker rows.
+    gramless = docs.filter(
+        F.coalesce(F.size(word_shingles(F.col(text_col), shingle_n)), F.lit(0)) <= 0
+    ).select(
+        F.col(id_col).alias("doc_id"),
+        F.lit(-1).alias("band"),
+        F.lit(None).cast("string").alias("key"),
+    )
+    banded_all = (
+        banded_minhash(docs, id_col, text_col, k, bands, shingle_n)
+        .unionByName(gramless)
+        .localCheckpoint()
+    )
     for b in range(n_batches):
-        nb = banded_all.filter(batch_fn(F.col("doc_id")) == F.lit(b))
-        have_index = b > 0
+        nb = banded_all.filter(
+            (F.col("band") >= 0) & (batch_fn(F.col("doc_id")) == F.lit(b))
+        )
+        # from what earlier batches actually appended: an empty or
+        # all-gramless batch writes no band partition
+        have_index = _index_has_bands(spark, path)
         rejected = _admission_rejected_ids(
             spark, path, nb, max_bucket, True, have_index
         )
@@ -946,13 +965,17 @@ def admit_batches(
             "append" if have_index else "overwrite",
             cluster=not have_index,
         )
-    # every admitted doc has exactly ONE banding row per band, so the
-    # band=0 partition alone IS the admitted id set — partition-pruned
-    # single-band scan, no distinct, zero exchanges in the returned
-    # plan (a distinct over the full index would shuffle doc_ids of
-    # the whole admitted corpus at scale for nothing)
-    idx_ids = _rp(spark, path).filter(F.col("band") == 0).select("doc_id")
-    return idx_ids.select(
+    # every admitted doc with grams has exactly ONE banding row per
+    # band, so the band=0 partition plus the gramless markers IS the
+    # admitted id set — partition-pruned single-band scan, no distinct,
+    # zero exchanges in the returned plan (a distinct over the full
+    # index would shuffle doc_ids of the whole admitted corpus at
+    # scale for nothing)
+    ids = banded_all.filter(F.col("band") < 0).select("doc_id")
+    if _index_has_bands(spark, path):
+        idx_ids = _rp(spark, path).filter(F.col("band") == 0).select("doc_id")
+        ids = idx_ids.unionByName(ids)
+    return ids.select(
         F.col("doc_id").alias(id_col),
         batch_fn(F.col("doc_id")).cast("int").alias("admitted_in_batch"),
     )

@@ -100,22 +100,6 @@ def _bucket(gram: Column, num_buckets: int) -> Column:
     return hash_hex(gram, 15) % num_buckets
 
 
-def hashed_ngram_counts(
-    df: DataFrame,
-    text_col: str,
-    ns: tuple[int, ...] = (1, 2),
-    num_buckets: int = DEFAULT_NUM_BUCKETS,
-) -> DataFrame:
-    """(bucket, cnt) — hashed n-gram occurrence counts. One map-side
-    combined aggregation; result cardinality <= num_buckets."""
-    g = _with_grams(df, [], text_col, ns)
-    return (
-        g.select(F.explode(F.transform("__g", lambda x: _bucket(x, num_buckets))).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
 def _tagged_counts(
     frames: list[tuple[int, DataFrame, tuple[int, ...]]],
     text_col: str,
@@ -147,27 +131,6 @@ def _tagged_counts(
     for r in rows:
         out[r["tag"]][r["bucket"]] = r["cnt"]
     return out
-
-
-def log_ratio_table(
-    corpus_counts: DataFrame,
-    target_counts: DataFrame,
-    num_buckets: int = DEFAULT_NUM_BUCKETS,
-    alpha: float = 1.0,
-) -> list[int]:
-    """Dense per-bucket quantized log-ratio table (micro-nats), index =
-    bucket id: ``round(ln(p_target(b) / p_corpus(b)) * 1e6)`` with
-    add-alpha smoothing ``p(b) = (cnt_b + alpha) / (total + alpha*B)``.
-
-    Driver-side by design — both inputs are <= num_buckets rows, and a
-    Python list re-enters the plan as one array literal, keeping the
-    scoring pass free of joins. The logs run in the driver's libm (the
-    same family the DuckDB oracle uses), and quantization makes a
-    1-ulp libm disagreement flip a value only when the true product
-    sits within ~1e-10 of a grid boundary."""
-    c = {r["bucket"]: r["cnt"] for r in corpus_counts.collect()}
-    t = {r["bucket"]: r["cnt"] for r in target_counts.collect()}
-    return _log_ratio_list(c, t, num_buckets, alpha)
 
 
 def _log_ratio_list(

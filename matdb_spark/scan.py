@@ -35,6 +35,7 @@ global order, ``ordered=False`` skips the range shuffle entirely.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 from typing import Iterator
 
@@ -157,6 +158,100 @@ def _select_manifest_files(
 _MAX_EXPLICIT_PATHS = 50_000
 
 
+def _leaf_dirs(tdir: str) -> list[str]:
+    """Relative ``seg=<s>[/__chunk_<dim>=<v>...]`` leaf directories of
+    a txn data directory: a walk of partition directories only — the
+    reader's own hidden-path rule skips ``.``-prefixed names and
+    ``_``-prefixed ones without ``=`` (``_temporary`` debris) —
+    leaving the file listing to the reader."""
+    out = []
+    for root, subdirs, _ in os.walk(tdir):
+        subdirs[:] = sorted(d for d in subdirs if "=" in d and d[0] != ".")
+        if not subdirs and root != tdir:
+            out.append(os.path.relpath(root, tdir).replace(os.sep, "/"))
+    return out
+
+
+@dataclass
+class SnapshotPlan:
+    """Driver-side planning of one snapshot read — the single copy
+    shared by the library scan (``scan_dataframe``) and both DSv2
+    readers (sources/dsv2.py)."""
+
+    txns: list[int]                      # survivors of tier-0 pruning
+    files: list[tuple[str, int]]         # (abs path, effective txn)
+    rank_overrides: dict[int, int]       # physical txn -> version rank
+    dedup_free: bool
+    tie_free: bool
+
+
+def plan_snapshot(
+    db_path: str, schema: Schema, txns: list[int], bounds: dict[str, tuple] | None
+) -> SnapshotPlan:
+    """Plan a read of the committed ``txns`` within the dim ``bounds``.
+
+    - Tier-0 pruning drops whole transactions whose manifest stats
+      (txn-level zone maps, stats.py) cannot intersect the bounds —
+      before any file listing or Spark job. Missing stats keep the txn
+      (correctness never depends on stats).
+    - ``dedup_free``: the snapshot provably holds ONE version per key —
+      exactly one surviving txn whose manifest carries ``unique_keys``
+      (stamped by compaction, whose output is by construction the
+      version-resolved snapshot). Version resolution, and with it the
+      scan's only shuffle, can be skipped. Bounded scans compose:
+      pruning only REMOVES txns, and a key inside the bounds cannot
+      live in a pruned txn.
+    - ``tie_free``: EVERY surviving txn is stamped ``unique_keys``, so
+      versions per key are provably distinct (ties can only come from
+      duplicate keys inside one write call) and multi-value row-level
+      resolution may use per-column ``max_by``.
+    - ``rank_overrides``: a compaction that folded only a PREFIX of the
+      version order (minor compaction) writes under a new physical txn
+      id but keeps its *logical* position — its manifest's
+      ``version_rank``. Resolution compares effective versions, so
+      transactions newer than the folded prefix still win.
+    - ``files``: the manifest-recorded file lists, chunk-pruned
+      driver-side against the bounds — no file LISTING at read time.
+      A manifest without a file list (legacy store, capped txn)
+      contributes its leaf data directories instead, pruned the same
+      way, so a reader still sees one entry per chunk.
+
+    Callers add what only they know: a read-your-own-writes overlay
+    voids ``dedup_free``/``tie_free`` (scan_dataframe)."""
+    read = list(txns)
+
+    def mf(t: int) -> dict:
+        return manifest.read_manifest_cached(db_path, t)
+
+    if bounds:
+        from matdb_spark.stats import txn_intersects
+
+        read = [t for t in read if txn_intersects(mf(t).get("stats"), bounds)]
+    rank: dict[int, int] = {}
+    for t in read:
+        vr = mf(t).get("version_rank")
+        if vr is not None and int(vr) != int(t):
+            rank[int(t)] = int(vr)
+    cranges = _chunk_ranges(schema, bounds or {})
+    files: list[tuple[str, int]] = []
+    for t in read:
+        tdir = manifest.txn_data_dir(db_path, t)
+        eff = rank.get(t, t)
+        fl = mf(t).get("files")
+        if fl is None:
+            fl = _leaf_dirs(tdir)
+        files.extend(
+            (f"{tdir}/{rel}", eff) for rel in _select_manifest_files(fl, cranges)
+        )
+    return SnapshotPlan(
+        txns=read,
+        files=files,
+        rank_overrides=rank,
+        dedup_free=len(read) == 1 and bool(mf(read[0]).get("unique_keys")),
+        tie_free=bool(read) and all(mf(t).get("unique_keys") for t in read),
+    )
+
+
 def _read_schema(schema: Schema):
     """Explicit Parquet read schema for segment scans: file columns
     (dims, values, write sequence) plus the partition-directory columns
@@ -242,136 +337,55 @@ def scan_dataframe(
 
     parts: list[DataFrame] = []
 
-    read_txns = list(source.visible_txns)
-    if bounds:
-        # Tier-0 pruning: drop whole transactions whose manifest stats
-        # (txn-level zone maps, stats.py) cannot intersect the bounds —
-        # before any file listing or Spark job. Missing stats keep the
-        # txn (correctness never depends on stats).
-        from matdb_spark.stats import txn_intersects
-
-        read_txns = [
-            t
-            for t in read_txns
-            if txn_intersects(
-                manifest.read_manifest_cached(source.db_path, t).get("stats"), bounds
-            )
-        ]
-    # Dedup-free fast path: a snapshot that provably holds ONE version
-    # per key needs no version-resolution aggregation — the scan's only
-    # shuffle disappears. Provable case: exactly one visible txn whose
-    # manifest carries ``unique_keys`` (stamped by compaction, whose
-    # output is by construction the version-resolved snapshot), and no
-    # read-your-own-writes overlay. At 100 TB this is the difference
-    # between a full-table shuffle and a pure scan for every read of a
-    # compacted store. Bounded scans compose: tier-0 pruning can only
-    # REMOVE txns, and a key inside the bounds cannot live in a pruned
-    # txn (its stats don't intersect), so a surviving single
-    # unique-keys txn is still duplicate-free within the bounds.
-    dedup_free = (
-        not source.buffered_rows
-        and not (source.own_txn is not None and source.own_staged_segments > 0)
-        and len(read_txns) == 1
-        and bool(
-            manifest.read_manifest_cached(source.db_path, read_txns[0]).get(
-                "unique_keys"
-            )
-        )
-    )
-    # Tie-free: version TIES (identical (txn, seq) on one key) can only
-    # arise from duplicate keys inside a single write call; when EVERY
-    # visible txn is stamped unique_keys (dedup'ed bulk loads,
-    # compactions) and there is no RYOW overlay, versions per key are
-    # provably distinct. Multi-value row-level resolution can then use
-    # per-column max_by over the packed-long version — hash-aggregable
-    # — without risking a row stitched from different tied writes.
-    tie_free = (
-        not source.buffered_rows
-        and not (source.own_txn is not None and source.own_staged_segments > 0)
-        and len(read_txns) > 0
-        and all(
-            manifest.read_manifest_cached(source.db_path, t).get("unique_keys")
-            for t in read_txns
-        )
-    )
-    # Version-rank overrides: a compaction that folded only a PREFIX of
-    # the version order (minor compaction) writes under a new physical
-    # txn id but must keep its *logical* position — its manifest's
-    # ``version_rank`` (= the highest effective version it absorbed).
-    # Version resolution compares effective versions, so transactions
-    # newer than the folded prefix still win over the rewrite.
-    rank_overrides: dict[int, int] = {}
-    # read_txns holds only committed txns here (the own staged txn — which
-    # has no manifest yet — is appended just below)
-    for t in read_txns:
-        vr = manifest.read_manifest_cached(source.db_path, t).get("version_rank")
-        if vr is not None and int(vr) != int(t):
-            rank_overrides[int(t)] = int(vr)
-    if source.own_txn is not None and source.own_staged_segments > 0:
-        read_txns.append(source.own_txn)
-    if read_txns:
-        # Resolve the file set from manifests when every committed txn
-        # recorded one: no filesystem LISTING job at read time (at
-        # scale, listing thousands of chunk dirs costs more than the
-        # pruned read itself), and bounded scans chunk-prune the list
-        # driver-side before the reader sees a single path. Own staged
-        # segments have no manifest yet — their txn dir is passed as a
-        # directory (small listing). Any committed txn without a file
-        # list (legacy store, capped txn) falls back to directories.
-        paths: list[str] = []
-        explicit_ok = True
-        cranges = _chunk_ranges(schema, bounds or {})
-        for t in read_txns:
-            tdir = manifest.txn_data_dir(source.db_path, t)
-            if t == source.own_txn:
-                paths.append(tdir)
-                continue
-            fl = manifest.read_manifest_cached(source.db_path, t).get("files")
-            if fl is None:
-                explicit_ok = False
-                break
-            paths.extend(f"{tdir}/{rel}" for rel in _select_manifest_files(fl, cranges))
-            if len(paths) > _MAX_EXPLICIT_PATHS:
-                # bail BEFORE materializing millions of path strings —
-                # past this size the directory reader wins anyway
-                explicit_ok = False
-                break
-        if not explicit_ok:
-            paths = [manifest.txn_data_dir(source.db_path, t) for t in read_txns]
+    plan = plan_snapshot(source.db_path, schema, source.visible_txns, bounds)
+    # read-your-own-writes overlays add versions no manifest describes
+    staged = source.own_txn is not None and source.own_staged_segments > 0
+    overlay = staged or bool(source.buffered_rows)
+    dedup_free = plan.dedup_free and not overlay
+    tie_free = plan.tie_free and not overlay
+    paths = [path for path, _ in plan.files]
+    if len(paths) > _MAX_EXPLICIT_PATHS:
+        # past this size the directory reader wins anyway
+        paths = [manifest.txn_data_dir(source.db_path, t) for t in plan.txns]
+    if staged:
+        # own staged segments have no manifest yet: their txn dir is
+        # passed as a directory (small listing)
+        paths.append(manifest.txn_data_dir(source.db_path, source.own_txn))
+    if paths:  # empty = no txn, or every committed file chunk-pruned away
         # Catalog-schema read: no footer inference, no mergeSchema job
         # (see _read_schema). Files predating an evolved value column
         # read it as typed null.
-        reader = spark.read.option(
-            "basePath", manifest.data_dir(source.db_path)
-        ).schema(_read_schema(schema))
-        if paths:  # empty = every committed file chunk-pruned away
-            df = reader.parquet(*paths)
-            # Prune BEFORE projecting away the __chunk_* partition columns.
-            for cond in _range_filters(schema, bounds or {}, with_chunks=True):
-                df = df.filter(cond)
-            if predicate is not None:
-                df = df.filter(predicate)
-            # Partition dirs contribute txn=<t>, seg=<s>, __chunk_* columns;
-            # the explicit catalog read schema guarantees every value
-            # column exists (typed null where a file predates it).
-            txn_expr = F.col("txn").cast("long")
-            if rank_overrides:
-                case = None
-                for t, r in sorted(rank_overrides.items()):
-                    cond = F.col("txn") == F.lit(t)
-                    case = (
-                        F.when(cond, F.lit(r))
-                        if case is None
-                        else case.when(cond, F.lit(r))
-                    )
-                txn_expr = case.otherwise(txn_expr).cast("long")
-            df = df.select(
-                txn_expr.alias(TXN_COL),
-                F.col(SEQ_COL),
-                *[F.col(c) for c in dims],
-                *[F.col(c) for c in vals],
-            )
-            parts.append(df)
+        df = (
+            spark.read.option("basePath", manifest.data_dir(source.db_path))
+            .schema(_read_schema(schema))
+            .parquet(*paths)
+        )
+        # Prune BEFORE projecting away the __chunk_* partition columns.
+        for cond in _range_filters(schema, bounds or {}, with_chunks=True):
+            df = df.filter(cond)
+        if predicate is not None:
+            df = df.filter(predicate)
+        # Partition dirs contribute txn=<t>, seg=<s>, __chunk_* columns;
+        # the explicit catalog read schema guarantees every value
+        # column exists (typed null where a file predates it).
+        txn_expr = F.col("txn").cast("long")
+        if plan.rank_overrides:
+            case = None
+            for t, r in sorted(plan.rank_overrides.items()):
+                cond = F.col("txn") == F.lit(t)
+                case = (
+                    F.when(cond, F.lit(r))
+                    if case is None
+                    else case.when(cond, F.lit(r))
+                )
+            txn_expr = case.otherwise(txn_expr).cast("long")
+        df = df.select(
+            txn_expr.alias(TXN_COL),
+            F.col(SEQ_COL),
+            *[F.col(c) for c in dims],
+            *[F.col(c) for c in vals],
+        )
+        parts.append(df)
 
     if source.buffered_rows:
         # Read-your-own-writes overlay for unflushed rows

@@ -22,16 +22,21 @@ cursors on the read side, (stream_source, batch_id) manifest stamps
 on the write side), deletes included (tombstones ride as
 all-null-value rows, which IS the engine's delete).
 
-Built on the Spark 4 Python Data Source API. The DRIVER side reuses
-the exact planning tiers of the library scan (scan.py scan_dataframe):
-manifest-resolved file lists (no listing job), tier-0 txn-stats
-pruning, chunk pruning from pushed-down dimension filters, and
-version-rank overrides for minor compactions. The EXECUTOR side is
-one Arrow pipeline per CHUNK: every version of a key lives in the
-same chunk by construction (chunk = f(key), schema.rs:28-38's routing
+Built on the Spark 4 Python Data Source API. The DRIVER side holds
+no planning of its own: both readers call the planner the library
+scan uses (scan.py ``plan_snapshot`` — manifest-resolved file lists,
+tier-0 txn-stats pruning, chunk pruning from pushed-down dimension
+filters, version-rank overrides for minor compactions) and the
+manifest layer's shared ``as_of_horizon`` / ``change_window_txns``
+checks, then group the planned files into per-chunk partitions
+(``_chunk_partitions``). The EXECUTOR side is one Arrow pipeline per
+CHUNK (``_resolve_chunk``): every version of a key lives in the same
+chunk by construction (chunk = f(key), schema.rs:28-38's routing
 invariant), so newest-(txn, seq)-wins resolution is chunk-local and
 the source needs NO shuffle at all — Spark receives already-resolved
-snapshot rows as Arrow record batches.
+rows as Arrow record batches. It stays separate from the library's
+JVM ``max_by`` plan because it is the only resolver that runs inside
+Python DSv2 tasks.
 
 Semantics and bounds, stated plainly:
 - Committed state only (a snapshot of the store as of the horizon) —
@@ -84,24 +89,10 @@ from pyspark.sql.datasource import (
 )
 
 from matdb_spark import manifest
-from matdb_spark.schema import SEQ_COL, Schema
-from matdb_spark.scan import _chunk_ranges, _select_manifest_files
+from matdb_spark.schema import SEQ_COL, TXN_COL, Schema
+from matdb_spark.scan import plan_snapshot
 
 SCHEMA_FILENAME = "schema.json"
-
-_ARROW_TYPES = {
-    "long": "int64",
-    "int": "int32",
-    "double": "float64",
-    "float": "float32",
-    "string": "string",
-    "timestamp": "timestamp[us, tz=UTC]",
-    "date": "date32[day]",
-    "boolean": "bool",
-    "binary": "binary",
-    "decimal(20,0)": "decimal128(20, 0)",
-}
-
 
 def _truthy(v) -> bool:
     return str(v).strip().lower() in ("true", "1", "yes")
@@ -284,6 +275,92 @@ class ChunkPartition(InputPartition):
     dedup_free: bool = False
 
 
+def _chunk_partitions(files: list, dedup_free: bool) -> list[ChunkPartition]:
+    """Planned ``(path, effective_txn)`` pairs → scan tasks, for both
+    readers. Every version of a key lives in one chunk, so grouping by
+    the ``__chunk_*`` path components makes resolution task-local. A
+    provably duplicate-free plan needs no resolution: one task per
+    file."""
+    if not files:
+        return [ChunkPartition(files=[], dedup_free=dedup_free)]
+    if dedup_free:
+        return [ChunkPartition(files=[fe], dedup_free=True) for fe in files]
+    groups: dict[tuple, list] = {}
+    for path, eff in files:
+        key = tuple(
+            sorted(p for p in path.split("/") if p.startswith("__chunk_") and "=" in p)
+        )
+        groups.setdefault(key, []).append((path, eff))
+    return [ChunkPartition(files=g, dedup_free=False) for g in groups.values()]
+
+
+def _row_fields(sch: Schema) -> list:
+    """Arrow fields of a store row: non-null dims, then values."""
+    import pyarrow as pa
+
+    return [
+        pa.field(d.name, _arrow_type(d.type), nullable=False) for d in sch.dimensions
+    ] + [pa.field(v.name, _arrow_type(v.type)) for v in sch.values]
+
+
+def _resolve_chunk(sch: Schema, partition: ChunkPartition):
+    """One chunk's newest-(txn, seq)-wins resolution as a pure-Arrow
+    pipeline, shared by both readers: read each file (missing evolved
+    value columns materialize as typed nulls), stamp its effective txn
+    as ``__txn``, sort by (dims, txn, seq) and keep the LAST row per
+    key (== max_by((txn, seq)) of the JVM path). Returns dims, values
+    and ``__txn``; all-null-value rows (tombstones) are kept for the
+    caller to drop or tag. A duplicate-free partition skips the sort."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    dims = sch.dim_names
+    cols = dims + sch.value_names
+    fields = [pa.field(f.name, f.type) for f in _row_fields(sch)]
+    file_schema = pa.schema(fields + [pa.field(SEQ_COL, pa.int64())])
+    read_cols = cols if partition.dedup_free else cols + [SEQ_COL]
+    tables = []
+    for path, eff in partition.files:
+        t = ds.dataset(path, schema=file_schema, format="parquet").to_table(
+            columns=read_cols
+        )
+        tables.append(
+            t.append_column(TXN_COL, pa.array(np.full(len(t), eff, dtype=np.int64)))
+        )
+    if not tables:
+        return pa.schema(fields + [pa.field(TXN_COL, pa.int64())]).empty_table()
+    t = pa.concat_tables(tables)
+    if not partition.dedup_free and len(t) > 1:
+        t = t.sort_by(
+            [(d, "ascending") for d in dims]
+            + [(TXN_COL, "ascending"), (SEQ_COL, "ascending")]
+        )
+        # winner = last row of each key group after the sort
+        last = np.zeros(len(t), dtype=bool)
+        last[-1] = True
+        for d in dims:
+            a = t[d].to_numpy(zero_copy_only=False)
+            last[:-1] |= a[:-1] != a[1:]
+        t = t.filter(pa.array(last))
+    return t.select(cols + [TXN_COL])
+
+
+def _value_set(t, vals: list):
+    """Per row: does any value cell hold a value? False marks a
+    tombstone; a key-only schema has none."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if not vals:
+        return pa.array(np.ones(len(t), dtype=bool))
+    m = pc.is_valid(t[vals[0]])
+    for v in vals[1:]:
+        m = pc.or_(m, pc.is_valid(t[v]))
+    return m
+
+
 def register_matdb_source(spark) -> None:
     """Register the ``matdb`` format with a session (idempotent).
     Python-source filter pushdown ships behind a conf flag in Spark 4
@@ -463,145 +540,27 @@ class MatdbSnapshotReader(DataSourceReader):
 
     # ---- driver-side planning ----------------------------------------
     def partitions(self):
-        horizon = self._horizon()
-        visible = manifest.visible_txn_ids(self.db_path, horizon)
-        if self.bounds:
-            from matdb_spark.stats import txn_intersects
-
-            visible = [
-                t
-                for t in visible
-                if txn_intersects(
-                    manifest.read_manifest_cached(self.db_path, t).get("stats"),
-                    self.bounds,
-                )
-            ]
-        dedup_free = len(visible) == 1 and bool(
-            manifest.read_manifest_cached(self.db_path, visible[0]).get(
-                "unique_keys"
-            )
+        current = max(manifest.committed_txn_ids(self.db_path), default=0) + 1
+        horizon = (
+            current
+            if self.as_of is None
+            else manifest.as_of_horizon(self.db_path, self.as_of, current)
         )
-        rank = {}
-        for t in visible:
-            vr = manifest.read_manifest_cached(self.db_path, t).get("version_rank")
-            if vr is not None and int(vr) != int(t):
-                rank[int(t)] = int(vr)
-        cranges = _chunk_ranges(self.schema_obj, self.bounds)
-        files: list[tuple[str, int]] = []  # (abs path, effective txn)
-        for t in visible:
-            tdir = manifest.txn_data_dir(self.db_path, t)
-            fl = manifest.read_manifest_cached(self.db_path, t).get("files")
-            if fl is None:  # legacy/capped manifest: walk the txn dir
-                fl = [
-                    os.path.relpath(os.path.join(r, f), tdir)
-                    for r, _, fs in os.walk(tdir)
-                    for f in fs
-                    if f.endswith(".parquet")
-                ]
-            eff = rank.get(t, t)
-            files.extend(
-                (os.path.join(tdir, rel), eff)
-                for rel in _select_manifest_files(fl, cranges)
-            )
-        if not files:
-            return [ChunkPartition(files=[], dedup_free=dedup_free)]
-        if dedup_free:
-            # no resolution needed: maximum parallelism, one task/file
-            return [ChunkPartition(files=[fe], dedup_free=True) for fe in files]
-        groups: dict[tuple, list] = {}
-        for path, eff in files:
-            key = tuple(
-                sorted(
-                    p
-                    for p in path.split(os.sep)
-                    if p.startswith("__chunk_") and "=" in p
-                )
-            )
-            groups.setdefault(key, []).append((path, eff))
-        return [ChunkPartition(files=g, dedup_free=False) for g in groups.values()]
-
-    def _horizon(self) -> int:
-        committed = manifest.committed_txn_ids(self.db_path)
-        current = max(committed, default=0) + 1
-        if self.as_of is None:
-            return current
-        if self.as_of >= current:
-            raise ValueError(
-                f"as_of={self.as_of} is in the future (next txn {current})"
-            )
-        gone = manifest.missing_history(self.db_path, self.as_of)
-        if gone:
-            raise ValueError(
-                f"time-travel snapshot as_of={self.as_of} is unreadable: "
-                f"txns {gone} were vacuumed after a later compaction"
-            )
-        return self.as_of + 1
+        visible = manifest.visible_txn_ids(self.db_path, horizon)
+        plan = plan_snapshot(self.db_path, self.schema_obj, visible, self.bounds)
+        return _chunk_partitions(plan.files, plan.dedup_free)
 
     # ---- executor-side read ------------------------------------------
     def read(self, partition: ChunkPartition):
-        """One chunk's resolution as a pure-Arrow pipeline: read each
-        file (missing evolved value columns materialize as typed
-        nulls), stamp its effective txn, sort by (dims, txn, seq),
-        keep the LAST row per key (== max_by((txn, seq)) of the JVM
-        path), drop all-null-value rows (block.rs:277-279: unset cells
-        never appear), and emit batches."""
-        import numpy as np
+        """One chunk's snapshot rows: the shared resolution minus
+        all-null-value rows (block.rs:277-279: unset cells never
+        appear), as Arrow batches."""
         import pyarrow as pa
-        import pyarrow.dataset as ds
 
         sch = self.schema_obj
-        dims, vals = sch.dim_names, sch.value_names
-        out_fields = [
-            pa.field(d.name, _arrow_type(d.type), nullable=False)
-            for d in sch.dimensions
-        ] + [pa.field(v.name, _arrow_type(v.type)) for v in sch.values]
-        out_schema = pa.schema(out_fields)
-        if not partition.files:
-            yield from pa.table(
-                {f.name: pa.array([], f.type) for f in out_fields}
-            ).to_batches()
-            return
-        file_schema = pa.schema(
-            [pa.field(d.name, _arrow_type(d.type)) for d in sch.dimensions]
-            + [pa.field(v.name, _arrow_type(v.type)) for v in sch.values]
-            + [pa.field(SEQ_COL, pa.int64())]
-        )
-        tables = []
-        for path, eff in partition.files:
-            t = ds.dataset(path, schema=file_schema, format="parquet").to_table(
-                columns=dims + vals + ([] if partition.dedup_free else [SEQ_COL])
-            )
-            if not partition.dedup_free:
-                t = t.append_column(
-                    "__txn", pa.array([eff] * len(t), pa.int64())
-                )
-            tables.append(t)
-        t = tables[0] if len(tables) == 1 else pa.concat_tables(tables)
-        if not partition.dedup_free and len(t):
-            t = t.sort_by(
-                [(d, "ascending") for d in dims]
-                + [("__txn", "ascending"), (SEQ_COL, "ascending")]
-            )
-            # winner = last row of each key group after the sort
-            if len(t) > 1:
-                neq = np.zeros(len(t) - 1, dtype=bool)
-                for d in dims:
-                    a = t[d].to_numpy(zero_copy_only=False)
-                    neq |= a[:-1] != a[1:]
-                mask = np.append(neq, True)
-            else:
-                mask = np.array([True])
-            t = t.filter(pa.array(mask)).select(dims + vals)
-        else:
-            t = t.select(dims + vals)
-        if vals and len(t):
-            import pyarrow.compute as pc
-
-            any_set = pc.is_valid(t[vals[0]])
-            for v in vals[1:]:
-                any_set = pc.or_(any_set, pc.is_valid(t[v]))
-            t = t.filter(any_set)
-        yield from t.cast(out_schema).to_batches()
+        t = _resolve_chunk(sch, partition)
+        t = t.filter(_value_set(t, sch.value_names)).drop_columns([TXN_COL])
+        yield from t.cast(pa.schema(_row_fields(sch))).to_batches()
 
 
 # ------------------------------------------------------------- writer
@@ -649,10 +608,7 @@ def _write_segment_files(iterator, schema_obj, base_dir, flush_rows=None):
     dims, vals = sch.dim_names, sch.value_names
     cols = dims + vals
     chunked = sch.chunked_dims
-    arrow_fields = [
-        pa.field(d.name, _arrow_type(d.type), nullable=False)
-        for d in sch.dimensions
-    ] + [pa.field(v.name, _arrow_type(v.type)) for v in sch.values]
+    arrow_fields = _row_fields(sch)
     arrow_fields.append(pa.field(SEQ_COL, pa.int64(), nullable=False))
     out_schema = pa.schema(arrow_fields)
     stat_dims = [
@@ -990,104 +946,33 @@ class MatdbChangesStreamReader(DataSourceStreamReader):
         return {"cursor": manifest.safe_feed_head(self.db_path)}
 
     def partitions(self, start: dict, end: dict):
-        lo, hi = int(start["cursor"]), int(end["cursor"])
-        window = []
-        for t in manifest.committed_txn_ids(self.db_path):
-            if not (lo < t <= hi):
-                continue
-            if manifest.read_manifest_cached(self.db_path, t).get("replaces"):
-                continue  # compaction rewrite, not a logical change
-            window.append(t)
-        files: list[tuple[str, int]] = []
-        for t in window:
-            tdir = manifest.txn_data_dir(self.db_path, t)
-            fl = manifest.read_manifest_cached(self.db_path, t).get("files")
-            if fl is None:
-                fl = [
-                    os.path.relpath(os.path.join(r, f), tdir)
-                    for r, _, fs in os.walk(tdir)
-                    for f in fs
-                    if f.endswith(".parquet")
-                ]
-            files.extend((os.path.join(tdir, rel), t) for rel in fl)
-        if not files:
-            return [ChunkPartition(files=[], dedup_free=False)]
-        groups: dict[tuple, list] = {}
-        for path, eff in files:
-            key = tuple(
-                sorted(
-                    p
-                    for p in path.split(os.sep)
-                    if p.startswith("__chunk_") and "=" in p
-                )
-            )
-            groups.setdefault(key, []).append((path, eff))
-        return [ChunkPartition(files=g, dedup_free=False) for g in groups.values()]
+        window = manifest.change_window_txns(
+            self.db_path, int(start["cursor"]), int(end["cursor"]), False
+        )
+        plan = plan_snapshot(self.db_path, self.schema_obj, window, None)
+        return _chunk_partitions(plan.files, dedup_free=False)
 
     def read(self, partition: ChunkPartition):
-        """Window-net-effect rows for one chunk: newest (txn, seq) per
-        key over the WINDOW segments only, tombstones kept and tagged
+        """Window-net-effect rows for one chunk: the shared resolution
+        over the WINDOW segments only, tombstones kept and tagged
         'delete' (a scan drops them; a feed must deliver them)."""
-        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.dataset as ds
 
         sch = self.schema_obj
-        dims, vals = sch.dim_names, sch.value_names
-        out_fields = (
-            [
-                pa.field(d.name, _arrow_type(d.type), nullable=False)
-                for d in sch.dimensions
+        t = _resolve_chunk(sch, partition)
+        tag = pc.if_else(
+            _value_set(t, sch.value_names), pa.scalar("upsert"), pa.scalar("delete")
+        )
+        t = t.add_column(t.num_columns - 1, "change_type", tag)
+        out = pa.schema(
+            _row_fields(sch)
+            + [
+                pa.field("change_type", pa.string(), nullable=False),
+                pa.field(TXN_COL, pa.int64(), nullable=False),
             ]
-            + [pa.field(v.name, _arrow_type(v.type)) for v in sch.values]
-            + [pa.field("change_type", pa.string(), nullable=False),
-               pa.field("__txn", pa.int64(), nullable=False)]
         )
-        out_schema = pa.schema(out_fields)
-        if not partition.files:
-            yield from pa.table(
-                {f.name: pa.array([], f.type) for f in out_fields}
-            ).to_batches()
-            return
-        file_schema = pa.schema(
-            [pa.field(d.name, _arrow_type(d.type)) for d in sch.dimensions]
-            + [pa.field(v.name, _arrow_type(v.type)) for v in sch.values]
-            + [pa.field(SEQ_COL, pa.int64())]
-        )
-        tables = []
-        for path, eff in partition.files:
-            t = ds.dataset(path, schema=file_schema, format="parquet").to_table(
-                columns=dims + vals + [SEQ_COL]
-            )
-            t = t.append_column("__txn", pa.array([eff] * len(t), pa.int64()))
-            tables.append(t)
-        t = tables[0] if len(tables) == 1 else pa.concat_tables(tables)
-        if len(t):
-            t = t.sort_by(
-                [(d, "ascending") for d in dims]
-                + [("__txn", "ascending"), (SEQ_COL, "ascending")]
-            )
-            if len(t) > 1:
-                neq = np.zeros(len(t) - 1, dtype=bool)
-                for d in dims:
-                    a = t[d].to_numpy(zero_copy_only=False)
-                    neq |= a[:-1] != a[1:]
-                mask = np.append(neq, True)
-            else:
-                mask = np.array([True])
-            t = t.filter(pa.array(mask))
-        t = t.select(dims + vals + ["__txn"])
-        if vals and len(t):
-            any_set = pc.is_valid(t[vals[0]])
-            for v in vals[1:]:
-                any_set = pc.or_(any_set, pc.is_valid(t[v]))
-            ctype = pc.if_else(any_set, pa.scalar("upsert"), pa.scalar("delete"))
-        else:
-            ctype = pa.array(["upsert"] * len(t), pa.string())
-        t = t.append_column("change_type", ctype)
-        t = t.select(dims + vals + ["change_type", "__txn"])
-        yield from t.cast(out_schema).to_batches()
+        yield from t.cast(out).to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # cursor durability is the checkpoint's job

@@ -118,45 +118,6 @@ def _recover_dims(db_path: str) -> None:
         shutil.rmtree(old, ignore_errors=True)
 
 
-def encode_sensor_rows(
-    raw: DataFrame, sensors_dim: DataFrame | None, dim_spill_path: str | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """(fact rows [time, sensor_id, value], updated dictionary).
-
-    Skips rows whose timestamp fails to parse, like the reference's
-    per-line error path; an empty/invalid value encodes as 0.
-
-    Library-facing convenience over the same helpers ``load()``
-    composes (load additionally sequences the persistence swap BEFORE
-    building facts — crash ordering it cannot delegate here). The
-    updated dictionary is materialized DISTRIBUTED, never collected to
-    the driver (a high-cardinality key space must not grow driver
-    memory): with ``dim_spill_path`` it is written there as parquet
-    and read back; without one it is ``localCheckpoint``-ed to
-    executor storage. Either way the returned dim is severed from the
-    lazy plan over the previous on-disk dictionary. The encode join
-    broadcasts only when the materialized dictionary is small (parquet
-    bytes under 32 MB, or row count under the equivalent bound on the
-    checkpoint path); otherwise it is a plain shuffle join — at
-    dictionary sizes that big the shuffle is the correct plan, and
-    forcing broadcast would OOM every executor."""
-    ok = _clean_raw(raw)
-    dim_lazy = dictionary_encode(
-        ok, _DIM_KEYS, existing=sensors_dim, id_col="sensor_id"
-    )
-    spark = raw.sparkSession
-    if dim_spill_path is not None:
-        dim_lazy.write.mode("overwrite").parquet(dim_spill_path)
-        dim = spark.read.parquet(dim_spill_path)
-        broadcast_ok = _dim_parquet_size(dim_spill_path) < _BROADCAST_DIM_BYTES
-    else:
-        dim = dim_lazy.localCheckpoint(eager=True)
-        # no file sizes on the checkpoint path — bound by row count
-        # (~100 B/row keeps 300k rows safely under the byte threshold)
-        broadcast_ok = dim.count() <= 300_000
-    return _facts_against_dim(ok, dim, broadcast_ok), dim
-
-
 _DIM_KEYS = ["component", "sensor", "kind"]
 _BROADCAST_DIM_BYTES = 32 * 1024 * 1024
 

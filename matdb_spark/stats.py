@@ -107,21 +107,6 @@ def collect_segment_info(seg_dir: str, schema) -> tuple[dict | None, list[str]]:
     return stats, sorted(files)
 
 
-def list_segment_files(seg_dir: str) -> list[str]:
-    """Relative '/'-normalized parquet paths of one segment (walk
-    only; prefer :func:`collect_segment_info` to share the walk with
-    the stats sweep)."""
-    n = len(seg_dir.rstrip(os.sep)) + 1
-    return sorted(
-        p[n:].replace(os.sep, "/") for p in _iter_parquet_files(seg_dir)
-    )
-
-
-def collect_segment_stats(seg_dir: str, schema) -> dict | None:
-    """Stats half of :func:`collect_segment_info` (compat wrapper)."""
-    return collect_segment_info(seg_dir, schema)[0]
-
-
 def merge_stats(a: dict | None, b: dict | None) -> dict | None:
     """Combine per-segment stats into per-transaction stats. None is
     infectious: one segment without stats disables txn-level pruning

@@ -448,6 +448,59 @@ def test_dsv2_cdc_source_matches_changes(spark, tmp_path_factory):
     assert lib == got
 
 
+def test_dsv2_cdc_source_raises_on_vacuumed_window(spark, tmp_path_factory):
+    """A change window whose commits were folded by compaction and then
+    vacuumed is unreadable: the CDC source must fail the stream exactly
+    as Database.changes raises, never finish with zero rows."""
+    base = tmp_path_factory.mktemp("dsv2cdcvac")
+    p, ck = str(base / "db"), str(base / "ck")
+    register_matdb_source(spark)
+    schema = Schema(
+        dimensions=[Dimension("k", 10)], values=[Value("v", type="double")]
+    )
+    db = Database.create(spark, p, schema)
+    for i in range(3):
+        t = db.begin(); t.add_rows([(i, float(i))]); t.commit()
+    assert db.compact() is not None
+    db.vacuum()
+    with pytest.raises(ValueError, match="unreadable"):
+        db.changes(0)
+    q = (
+        spark.readStream.format("matdb")
+        .option("feed", "changes")
+        .option("since", 0)
+        .load(p)
+        .writeStream.format("memory")
+        .queryName("dsv2_cdc_vacuumed_window")
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        with pytest.raises(Exception, match="unreadable"):
+            q.awaitTermination(120)
+    finally:
+        q.stop()
+
+
+def test_dsv2_reads_store_recreated_at_same_path(spark, tmp_path_factory):
+    """DSv2 planning runs in reused Python workers whose manifest
+    caches outlive a store: deleting and re-creating the store at the
+    same path must not serve the old store's manifests (same txn ids,
+    different files)."""
+    import shutil
+
+    register_matdb_source(spark)
+    p = str(tmp_path_factory.mktemp("dsv2re") / "db")
+    schema = Schema(dimensions=[Dimension("k", 10)], values=[Value("v")])
+    for gen in range(2):
+        shutil.rmtree(p, ignore_errors=True)
+        db = Database.create(spark, p, schema)
+        t = db.begin(); t.add_rows([(i, i + 100 * gen) for i in range(12)]); t.commit()
+        got = _key(spark.read.format("matdb").load(p))
+        assert got == [(i, i + 100 * gen) for i in range(12)]
+
+
 def test_dsv2_cdc_batch_read_raises(spark, tmp_path_factory):
     register_matdb_source(spark)
     p = str(tmp_path_factory.mktemp("dsv2cdcb") / "db")

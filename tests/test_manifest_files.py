@@ -63,7 +63,16 @@ def test_legacy_manifest_without_files_falls_back(spark):
         json.dump(payload, f)
     db2 = Database.open(spark, path)
     assert db2.begin().query(ordered=False).count() == 100
-    assert db2.begin().query_range({"k": (20, 29)}, ordered=False).count() == 10
+    rng = db2.begin().query_range({"k": (20, 29)}, ordered=False)
+    assert rng.count() == 10
+    # the fallback lists chunk directories, pruned like a file list
+    assert rng.inputFiles() and all("__chunk_k=2" in f for f in rng.inputFiles())
+    # the DSv2 reader plans the same fallback: one task per chunk
+    from matdb_spark.sources.dsv2 import MatdbSnapshotReader, register_matdb_source
+
+    register_matdb_source(spark)
+    assert spark.read.format("matdb").load(path).count() == 100
+    assert len(MatdbSnapshotReader(path, None).partitions()) == 10
 
 
 def test_mixed_staged_and_committed(spark):

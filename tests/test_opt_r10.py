@@ -89,6 +89,12 @@ def test_importance_filter_plan_is_exchange_free_single_scan(spark):
 # ------------------------------------------------------- admit_batches
 def test_admit_batches_matches_chained_admit_batch(spark, tmp_db_path):
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
+    # gramless documents (no 3-word shingle): no banding rows, so
+    # nothing can reject them — both forms must admit them
+    short = spark.createDataFrame(
+        [(10_000_000, ""), (10_000_001, "two words")], docs.schema
+    )
+    docs = docs.unionByName(short)
 
     fused_path = os.path.join(tmp_db_path, "fused_idx")
     fused = D.admit_batches(
@@ -111,12 +117,36 @@ def test_admit_batches_matches_chained_admit_batch(spark, tmp_db_path):
 
     assert fused.columns == ["doc_id", "admitted_in_batch"]
     assert _symdiff(fused, out) == 0
+    got_short = fused.filter(F.col("doc_id") >= 10_000_000).collect()
+    assert sorted(tuple(r) for r in got_short) == [(10_000_000, 1), (10_000_001, 2)]
     # teeth: the lifecycle must actually reject near-dups somewhere
     assert fused.count() < docs.count()
     # the two index directories hold the same banding relation
     a = spark.read.parquet(fused_path).select("doc_id", "band", "key")
     c = spark.read.parquet(chained_path).select("doc_id", "band", "key")
     assert _symdiff(a.distinct(), c.distinct()) == 0
+
+
+def test_admit_batches_gramless_first_batch(spark, tmp_db_path):
+    # batch 0 holds only gramless documents, so it appends no index
+    # rows; batch 1 must then create the index, not append to none
+    docs = spark.createDataFrame(
+        [
+            (0, ""),
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "a b"),
+            (3, "the quick brown fox jumps over the lazy dog"),
+            (5, "an entirely different sentence about other things"),
+        ],
+        "doc_id long, text string",
+    )
+    path = os.path.join(tmp_db_path, "gramless_idx")
+    fused = D.admit_batches(
+        spark, path, docs, "doc_id", "text", 2, lambda c: (c >= 1).cast("int")
+    )
+    assert sorted(tuple(r) for r in fused.collect()) == [
+        (0, 0), (1, 1), (2, 1), (5, 1)
+    ]
 
 
 def test_admit_batches_rejects_prepopulated_index(spark, tmp_db_path):
